@@ -1408,26 +1408,8 @@ def margin_mine_lsh(
             vec_col=vec_col,
             seed=seed,
         )
-        vecs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-        cos = _cosine_pairs_arrow(round_dp)
-        scored = (
-            pairs.join(
-                vecs.select(
-                    F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")
-                ),
-                "probe_id",
-            )
-            .join(
-                vecs.select(
-                    F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")
-                ),
-                "nbr_id",
-            )
-            .select(
-                "probe_id",
-                "nbr_id",
-                cos(F.col("_pv"), F.col("_nv")).alias("s"),
-            )
+        scored = _exact_rerank_pairs(
+            pairs, df, df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
         )
         return _margin_top2(scored, min_margin_x10k)
 
@@ -1698,19 +1680,9 @@ def margin_mine_ivf(
     # at sf0.1). Hash(probe_id) at spark.sql.shuffle.partitions is also
     # exactly the partitioning _margin_top2's window needs, so its
     # Exchange is elided — one tiny shuffle buys a wide rerank for free.
-    cand = cand.repartition(F.col("probe_id"))
-    vecs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    cos = _cosine_pairs_arrow(round_dp)
-    scored = (
-        cand.join(
-            vecs.select(F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")),
-            "probe_id",
-        )
-        .join(
-            vecs.select(F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")),
-            "nbr_id",
-        )
-        .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
+    scored = _exact_rerank_pairs(
+        cand.repartition(F.col("probe_id")), df, df,
+        id_col=id_col, vec_col=vec_col, round_dp=round_dp,
     )
     return _margin_top2(scored, min_margin_x10k)
 
@@ -2214,8 +2186,8 @@ def _adc_luts(X, code_mats, m: int, sub_dim: int):
     m matrices of (|probes| x k_codes). Accumulated SEQUENTIALLY over
     the sub_dim coordinates (no BLAS reassociation/FMA — the
     _pq_sumsq_seq convention) so the oracle's left-to-right list_sum
-    fold reproduces every entry bit-for-bit. Shared by the flat ADC
-    scan and the IVF-pruned one."""
+    fold reproduces every entry bit-for-bit. Used by the ADC scan
+    kernel (_adc_scan_kernel)."""
     import numpy as np
 
     luts = []
@@ -2289,6 +2261,314 @@ def normalize_rounded(
     )
 
 
+def _adc_scan_kernel(
+    b_index,
+    top: int,
+    code_mats,
+    m: int,
+    sub_dim: int,
+    dim: int,
+    id_col: str,
+    group_col: str | None,
+    vec_col: str,
+    cells_col: str | None,
+    round_dp: int,
+    cross_group_only: bool,
+    nbr_chunk: int,
+):
+    """mapInPandas kernel of the inverted-file ADC scan — the ONE
+    arithmetic every shape runs (flat PQ, cell-pruned IVFADC, residual
+    IVFADC, and every shard of each), which is what the bit-identity of
+    the sharded re-merge and of the full-probe = flat equivalence rests
+    on. Per batch: per-probe LUTs (_adc_luts), then per probed cell the
+    cell's slice of the broadcast index is scanned in `nbr_chunk`
+    blocks, each block's local top-`top` merging into the probe's
+    running top-`top` by the (adc desc, nbr_id) total order (merges are
+    batched through a per-probe buffer of 4·top candidates). Every
+    global top-C pair survives the block and cell it sits in, so the
+    result is independent of chunking and of cell iteration order.
+    `cells_col=None` means every probe scans every cell — the flat scan,
+    whose index is one literal cell, so it gains no per-probe Python
+    work. Residual mode (anchors in the broadcast) seeds each (probe,
+    cell) total with ⟨q, anchor⟩, folded sequentially over the dim
+    coordinates BEFORE the m LUT partials — an oracle's left-to-right
+    ``qa + lut_0 + … + lut_{m-1}`` replays it. Emits (probe_id, nbr_id,
+    adc) with the rounded ADC score the sharded re-merge orders by."""
+    import numpy as np
+
+    def scan(batches):
+        ids_a, grps_a, codes_a, slices, anchors = b_index.value
+        for pdf in batches:
+            if pdf.empty or top == 0:
+                continue
+            X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf[vec_col]])
+            n = len(pdf)
+            pids = pdf[id_col].to_numpy()
+            # exclusion key: same group (margin mining) or same id (ANN)
+            if cross_group_only:
+                excl_p, excl_a = pdf[group_col].to_numpy(), grps_a
+            else:
+                excl_p, excl_a = pids, ids_a
+            luts = _adc_luts(X, code_mats, m, sub_dim)
+            if cells_col is None:
+                probed = [(c, np.arange(n)) for c in slices]
+            else:
+                # invert probe -> cells into cell -> probe rows
+                lists = [np.asarray(cl, dtype=np.int64) for cl in pdf[cells_col]]
+                cells = np.concatenate(lists) if lists else np.zeros(0, np.int64)
+                rows = np.repeat(np.arange(n), [len(cl) for cl in lists])
+                probed = [
+                    (c, rows[cells == c]) for c in map(int, np.unique(cells))
+                    if c in slices
+                ]
+            # per-probe candidate buffer: block tops append at each row's
+            # fill offset, and a row is cut back to its running top-`top`
+            # by the (adc desc, nbr_id) total order when the next block
+            # would overflow it, then once at the end — one wide sort per
+            # ~3·top candidates instead of one merge sort per block
+            width = 4 * top
+            buf_s = np.full((n, width), -np.inf)
+            buf_i = np.zeros((n, width), dtype=np.int64)
+            fill = np.zeros(n, dtype=np.int64)
+
+            def compact(r):
+                order = np.lexsort((buf_i[r], -buf_s[r]), axis=1)[:, :top]
+                s = np.take_along_axis(buf_s[r], order, axis=1)
+                i = np.take_along_axis(buf_i[r], order, axis=1)
+                buf_s[r] = -np.inf
+                buf_s[r, :top], buf_i[r, :top] = s, i
+                fill[r] = top
+
+            for c, rp in probed:
+                c_lo, c_hi = slices[c]
+                cell_luts = [lut[rp] for lut in luts]
+                seed = None
+                if anchors is not None:
+                    xs, a_c = X[rp], anchors[c]
+                    seed = np.zeros(len(rp), dtype=np.float64)
+                    for d in range(dim):
+                        seed += xs[:, d] * a_c[d]
+                for lo in range(c_lo, c_hi, nbr_chunk):
+                    hi = min(lo + nbr_chunk, c_hi)
+                    if seed is None:
+                        adc = np.zeros((len(rp), hi - lo), dtype=np.float64)
+                    else:
+                        adc = np.repeat(seed[:, None], hi - lo, axis=1)
+                    for j in range(m):
+                        adc += cell_luts[j][:, codes_a[lo:hi, j]]
+                    adc = np.round(adc, round_dp)
+                    adc[excl_p[rp][:, None] == excl_a[None, lo:hi]] = -np.inf
+                    # block top (stable argsort over id-ascending columns:
+                    # ties to the lowest id), appended to the buffer
+                    part = np.argsort(-adc, axis=1, kind="stable")[:, :top]
+                    keep = part.shape[1]
+                    full = fill[rp] + keep > width
+                    if full.any():
+                        compact(rp[full])
+                    cols = fill[rp][:, None] + np.arange(keep)
+                    buf_s[rp[:, None], cols] = np.take_along_axis(adc, part, axis=1)
+                    buf_i[rp[:, None], cols] = ids_a[lo:hi][part]
+                    fill[rp] += keep
+            compact(np.arange(n))
+            best_s, best_i = buf_s[:, :top], buf_i[:, :top]
+            valid = np.isfinite(best_s)
+            yield pd.DataFrame(
+                {
+                    "probe_id": np.repeat(pids, valid.sum(axis=1)),
+                    "nbr_id": best_i[valid],
+                    "adc": best_s[valid],
+                }
+            )
+
+    return scan
+
+
+def _adc_scan_pairs(
+    probes_df: DataFrame,
+    codebook: DataFrame,
+    codes_df: DataFrame,
+    shortlist: int | None,
+    dim: int,
+    m: int = 16,
+    group_col: str | None = "label",
+    id_col: str = "vec_id",
+    vec_col: str = "nv",
+    round_dp: int = 6,
+    max_index_bytes: int = 1 << 30,
+    nbr_chunk: int = 1 << 18,
+    n_shards: int = 1,
+    index_df: DataFrame | None = None,
+    cross_group_only: bool = True,
+    validate_coverage: bool = False,
+    home_df: DataFrame | None = None,
+    cells_col: str | None = None,
+    anchors_df: DataFrame | None = None,
+) -> DataFrame:
+    """The inverted-file ADC scan behind adc_shortlist_pairs and
+    ivfadc_shortlist_pairs (see their docstrings for the contracts).
+    FAISS's layering: flat PQ is IVF-PQ with a single list. Without
+    `home_df` the whole index is ONE literal cell that every probe
+    scans — no home join, no coarse fit, no cell ranking, so the flat
+    path fires no job for cells; with `home_df` each index
+    row lives in its home cell's slice and a probe scans the cells in
+    its `cells_col` array (every cell when `cells_col` is None).
+
+    One index build: the (codes ⋈ index ⋈ home) rows are collected,
+    sorted driver-side by (cell, id) so each cell is a contiguous,
+    id-ascending slice, residency-guarded at `max_index_bytes` and
+    broadcast. One staleness guard (`validate_coverage`). One shard
+    scheme: past the residency budget the index splits into `n_shards`
+    hash shards by pmod(xxhash64(id), n), each shard is scanned with the
+    full shortlist cap and the per-shard top-C unions re-merge through
+    one bounded (adc desc, nbr_id) window. Bit-identical to the
+    unsharded scan with or without cells: a pair with global rank <= C
+    ranks <= C inside any subset that holds it."""
+    import numpy as np
+
+    if shortlist is not None and shortlist < 1:
+        raise ValueError(f"the ADC scan requires shortlist >= 1, got {shortlist}")
+    kind, shard_arg = ("PQ", "n_shards") if home_df is None else ("IVFADC", "n_cell_shards")
+    if n_shards < 1:
+        raise ValueError(f"{shard_arg} must be >= 1, got {n_shards}")
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    if cross_group_only and group_col is None:
+        raise ValueError("cross_group_only=True requires a group_col")
+    sub_dim = dim // m
+    books = _codebook_matrices(codebook.collect())
+    code_mats = [books[j][1] for j in range(m)]  # k_codes x sub_dim each
+    spark = probes_df.sparkSession
+
+    index_src = index_df if index_df is not None else probes_df
+    # group_col=None (general ANN): the index carries a constant group
+    grp = F.col(group_col) if group_col is not None else F.lit("")
+    indexed = codes_df.join(index_src.select(F.col(id_col), grp.alias("__g")), id_col)
+    if home_df is None:
+        indexed = indexed.withColumn("__cell", F.lit(0))
+    else:
+        indexed = indexed.join(
+            home_df.select(F.col(id_col), F.col("cell").alias("__cell")), id_col
+        )
+    indexed = indexed.select(id_col, "__g", "__cell", "codes")
+    if validate_coverage:
+        # staleness guard: ids must match EXACTLY — |codes| == |index| ==
+        # |codes ⋈ index (⋈ home)| (ids are unique on every side), or the
+        # inner joins would silently scan only the intersection
+        n_codes = codes_df.count()
+        n_index = index_src.count()
+        n_joined = indexed.count()
+        if not (n_codes == n_index == n_joined):
+            raise ValueError(
+                f"stale {kind} index: codes cover {n_joined} of {n_index} index "
+                f"rows ({n_codes} code rows) — rebuild the persisted index "
+                "assets on the current index table so ids match exactly. If "
+                "rebuilding does not fix it, the index table contains "
+                "zero-norm vectors (normalize_rounded drops them by "
+                "contract) — filter those rows out of the index first"
+            )
+    anchor_map = None
+    if anchors_df is not None:
+        anchor_map = {
+            int(r["cell"]): np.asarray(r["av"], dtype=np.float64)
+            for r in anchors_df.collect()
+        }
+
+    def build_index(sub: DataFrame):
+        # The sort runs DRIVER-side over the already-collected rows (r12):
+        # a cluster-side orderBy+collect pays a sampling pass + total-sort
+        # exchange for rows headed to the driver anyway.
+        rows = sub.collect()
+        n_idx = len(rows)
+        idx_bytes = n_idx * (m + 24)  # m codes + id/group/cell bookkeeping
+        if idx_bytes > max_index_bytes:
+            raise ValueError(
+                f"{kind} index would be ~{idx_bytes} bytes for {n_idx} vectors "
+                f"at m={m}, over the {max_index_bytes} residency budget — raise "
+                f"{shard_arg} (the tested shard-and-union path, bit-identical "
+                "re-merge)"
+            )
+        ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+        grps = np.array([r["__g"] for r in rows])
+        cells = np.array([r["__cell"] for r in rows], dtype=np.int64)
+        codes = np.array([r["codes"] for r in rows], dtype=np.int64).reshape(n_idx, m)
+        order = np.lexsort((ids, cells))
+        ids, grps, cells, codes = ids[order], grps[order], cells[order], codes[order]
+        # cell -> (start, end) slice offsets into the sorted arrays
+        bounds = np.flatnonzero(np.diff(cells)) + 1
+        slices = {
+            int(cells[s]): (int(s), int(e))
+            for s, e in zip(np.r_[0, bounds], np.r_[bounds, n_idx])
+            if e > s
+        }
+        if anchor_map is not None:
+            missing = set(slices) - set(anchor_map)
+            if missing:
+                raise ValueError(
+                    "residual IVFADC: anchors_df is missing anchors for "
+                    f"occupied cells {sorted(missing)[:5]}… — anchors must "
+                    "come from the same corpus/home assignment as codes_df"
+                )
+        return spark.sparkContext.broadcast((ids, grps, codes, slices, anchor_map)), n_idx
+
+    if n_shards == 1:
+        shards = [build_index(indexed)]
+    else:
+        # the shard loop filters+collects this join once PER shard — pin
+        # it so the codes join and its upstream compute run once
+        indexed = indexed.localCheckpoint()
+        shards = [
+            build_index(
+                indexed.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == s)
+            )
+            for s in range(n_shards)
+        ]
+    if shortlist is None:
+        # C = size_adc_shortlist(|index|) from the rows just collected —
+        # no separate count job (codes cover the index by contract)
+        shortlist = size_adc_shortlist(sum(n for _, n in shards))
+
+    # parallelism floor: the scan's wall is (probes/partitions) x |index|
+    # ADC work per task — a single-file source would otherwise run it in
+    # ONE task. Built AFTER the index(es), so the staleness/anchor raises
+    # fire before any probe-side analysis error (pinned by test).
+    from .sampling import ensure_min_partitions
+
+    probe_cols = (
+        [id_col] + ([group_col] if group_col is not None else []) + [vec_col]
+        + ([cells_col] if cells_col is not None else [])
+    )
+    probes = ensure_min_partitions(
+        probes_df.select(*probe_cols), spark.sparkContext.defaultParallelism
+    )
+    id_type = probes_df.schema[id_col].dataType.simpleString()
+    outs = [
+        probes.mapInPandas(
+            _adc_scan_kernel(
+                b_index, min(shortlist, n_idx), code_mats, m, sub_dim, dim,
+                id_col, group_col, vec_col, cells_col, round_dp,
+                cross_group_only, nbr_chunk,
+            ),
+            schema=f"probe_id {id_type}, nbr_id {id_type}, adc double",
+        )
+        for b_index, n_idx in shards
+    ]
+    if n_shards == 1:
+        return outs[0].select("probe_id", "nbr_id")
+    from pyspark.sql import Window
+
+    union = outs[0]
+    for extra in outs[1:]:
+        union = union.unionByName(extra)
+    # bounded window: <= n_shards * C rows per probe, same total order as
+    # the scan, so the selection is the unsharded top-C
+    w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
+    return (
+        union.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= shortlist)
+        .select("probe_id", "nbr_id")
+    )
+
+
 def adc_shortlist_pairs(
     df_norm: DataFrame,
     codebook: DataFrame,
@@ -2310,6 +2590,12 @@ def adc_shortlist_pairs(
     """Per-probe top-`shortlist` CROSS-GROUP candidates by ADC inner
     product over the compressed codes — the quadratic scan of margin
     mining run in the compressed domain. Returns (probe_id, nbr_id).
+    This is the one-cell case of the inverted-file scan
+    (_adc_scan_pairs, shared with ivfadc_shortlist_pairs): the whole
+    index is one literal cell every probe scans.
+
+    `shortlist=None` sizes C = size_adc_shortlist(|index|) from the
+    index rows the scan collects anyway (no separate count job).
 
     `validate_coverage=True` asserts the codes exactly cover the index
     rows before scanning (ADVICE r7): the codes⋈index join is INNER, so
@@ -2318,7 +2604,7 @@ def adc_shortlist_pairs(
     silently scan only the intersection. The persisted-asset callers
     (margin_mine_pq_xcorpus / pq_knn_join with a loaded pq_index) turn
     this on; in-query-derived codes are covering by construction and
-    skip the two count jobs.
+    skip the three count jobs.
 
     `cross_group_only=False` switches the exclusion mask from
     same-group to same-ID (the general batched-ANN contract:
@@ -2335,21 +2621,19 @@ def adc_shortlist_pairs(
     m one-byte codes + id + group per vector, 16-30x smaller than the
     raw corpus — are collected once and broadcast to every executor;
     each probe partition then scans the in-RAM index with numpy at
-    memory bandwidth, emitting C id-pairs per probe. This is the ONLY
-    corpus-sized collect in the engine and it is guarded: the build
-    raises when the index would exceed `max_index_bytes` (default 1 GiB
-    ~ 4e7 vectors at m=16).
+    memory bandwidth, emitting C id-pairs per probe. The build raises
+    when the index would exceed `max_index_bytes` (estimated at m + 24
+    bytes per vector; the 1 GiB default holds ~2.7e7 vectors at m=16).
 
     Past the residency budget, pass `n_shards > 1` — the TESTED
-    shard-and-union path, not just a documented escape hatch: the codes
-    split into n deterministic hash shards (pmod(xxhash64(id), n)),
-    each shard builds its own guarded in-RAM index and scans the probes
-    independently (per-shard top-C WITH the rounded ADC sims), and one
-    bounded window (<= n·C rows per probe) re-selects the GLOBAL top-C
-    by the same (adc desc, nbr_id) total order. Bit-identical to the
-    unsharded scan — every global top-C pair ranks <= C within its own
-    shard, so the union contains it, and the window's order is the
-    scan's — which is what lets one oracle certify both paths
+    shard-and-union path: the codes split into n deterministic hash
+    shards (pmod(xxhash64(id), n)), each shard builds its own guarded
+    in-RAM index and scans the probes independently (per-shard top-C
+    WITH the rounded ADC sims), and one bounded window (<= n·C rows per
+    probe) re-selects the GLOBAL top-C by the same (adc desc, nbr_id)
+    total order. Bit-identical to the unsharded scan — every global
+    top-C pair ranks <= C within its own shard — which is what lets one
+    oracle certify both paths
     (tests/test_llm_ops.py::test_sharded_scan_equals_unsharded). The
     raw-vector corpus is never collected anywhere.
 
@@ -2362,206 +2646,12 @@ def adc_shortlist_pairs(
     scanned in `nbr_chunk` slices with a running top-C merge — chunking
     cannot change the result because the ranking is a total order and
     each global top-C element survives its own chunk's local top-C."""
-    import numpy as np
-
-    if shortlist is not None and shortlist < 1:
-        raise ValueError(f"adc_shortlist_pairs requires shortlist >= 1, got {shortlist}")
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    if cross_group_only and group_col is None:
-        raise ValueError("cross_group_only=True requires a group_col")
-    sub_dim = dim // m
-    books = _codebook_matrices(codebook.collect())
-    code_mats = [books[j][1] for j in range(m)]  # k_codes x sub_dim each
-    spark = df_norm.sparkSession
-
-    index_src = index_df if index_df is not None else df_norm
-    # group_col=None (general ANN, cross_group_only=False): neither side
-    # needs a group column — the index carries a constant placeholder
-    grp_expr = (
-        F.col(group_col).alias("__g")
-        if group_col is not None
-        else F.lit("").alias("__g")
-    )
-    indexed = codes_df.join(
-        index_src.select(F.col(id_col), grp_expr), id_col
-    ).select(id_col, "__g", "codes")
-    if validate_coverage:
-        # staleness guard: ids must match EXACTLY in both directions —
-        # |codes| == |index| == |codes ⋈ index| (ids are unique on both
-        # sides by the pq_encode/table contracts, so three counts suffice)
-        n_codes = codes_df.count()
-        n_index = index_src.count()
-        n_joined = indexed.count()
-        if not (n_codes == n_index == n_joined):
-            raise ValueError(
-                f"stale PQ index: codes cover {n_joined} of {n_index} index "
-                f"rows ({n_codes} code rows) — re-encode the index "
-                "(pq_index_save) so codes and index ids match exactly. If "
-                "re-encoding does not fix it, the index table contains "
-                "zero-norm vectors (normalize_rounded drops them by "
-                "contract) — filter those rows out of the index first"
-            )
-    if n_shards > 1:
-        # the shard loop filters+collects this join once PER shard — pin
-        # it so the codes join and its upstream compute run once
-        indexed = indexed.localCheckpoint()
-
-    def build_index(sub: DataFrame):
-        # the compressed index: (nbr_id, nbr_grp, m codes), id-ascending
-        # so column order == id order and stable argsort ties break
-        # low-id. The sort runs DRIVER-side over the already-collected
-        # rows (r12): a cluster-side orderBy+collect pays a range-
-        # partitioning sampling pass + total-sort exchange over the codes
-        # join for rows that are headed to the driver anyway — the
-        # Python sort on the bounded (max_index_bytes-guarded) row set is
-        # the same total order for free.
-        idx_rows = sorted(sub.collect(), key=lambda r: r[id_col])
-        n_idx = len(idx_rows)
-        idx_bytes = n_idx * (m + 16)
-        if idx_bytes > max_index_bytes:
-            raise ValueError(
-                f"ADC index would be ~{idx_bytes} bytes for {n_idx} vectors at "
-                f"m={m}, over the {max_index_bytes} residency budget — raise "
-                "n_shards (the tested shard-and-union path, see docstring)"
-            )
-        nbr_ids = np.array([r[id_col] for r in idx_rows], dtype=np.int64)
-        nbr_grps = np.array([r["__g"] for r in idx_rows])
-        nbr_codes = (
-            np.array([r["codes"] for r in idx_rows], dtype=np.int64)
-            if n_idx
-            else np.zeros((0, m), dtype=np.int64)
-        )
-        return spark.sparkContext.broadcast((nbr_ids, nbr_grps, nbr_codes))
-
-    id_type = df_norm.schema[id_col].dataType.simpleString()
-
-    def make_scan(b_index, keep_top):
-        def scan(batches):
-            ids_a, grps_a, codes_a = b_index.value
-            for pdf in batches:
-                if pdf.empty or len(ids_a) == 0 or keep_top == 0:
-                    continue
-                X = np.asarray(
-                    [np.asarray(e, dtype=np.float64) for e in pdf[vec_col]]
-                )
-                pids = pdf[id_col].to_numpy()
-                pgrps = pdf[group_col].to_numpy() if cross_group_only else None
-                # per-sub LUTs, sequential over the sub_dim coords (no BLAS)
-                luts = _adc_luts(X, code_mats, m, sub_dim)
-                best_sims = None
-                best_ids = None
-                for lo in range(0, len(ids_a), nbr_chunk):
-                    hi = min(lo + nbr_chunk, len(ids_a))
-                    adc = np.zeros((X.shape[0], hi - lo), dtype=np.float64)
-                    for j in range(m):
-                        adc += luts[j][:, codes_a[lo:hi, j]]
-                    adc = np.round(adc, round_dp)
-                    if cross_group_only:
-                        # cross-group only (self is same-group → excluded)
-                        adc[pgrps[:, None] == grps_a[None, lo:hi]] = -np.inf
-                    else:
-                        # general ANN: exclude only the probe's own row
-                        adc[pids[:, None] == ids_a[None, lo:hi]] = -np.inf
-                    keep = min(keep_top, hi - lo)
-                    part = np.argsort(-adc, axis=1, kind="stable")[:, :keep]
-                    sims = np.take_along_axis(adc, part, axis=1)
-                    ids = ids_a[lo:hi][part]
-                    if best_sims is None:
-                        best_sims, best_ids = sims, ids
-                    else:
-                        best_sims = np.concatenate([best_sims, sims], axis=1)
-                        best_ids = np.concatenate([best_ids, ids], axis=1)
-                    if best_sims.shape[1] > keep_top:
-                        # running merge: re-rank the union by (-sim, id) —
-                        # stable argsort over id-ascending chunk blocks is
-                        # not id-ordered across blocks, so sort explicitly
-                        order = np.lexsort((best_ids, -best_sims), axis=1)
-                        order = order[:, :keep_top]
-                        best_sims = np.take_along_axis(best_sims, order, axis=1)
-                        best_ids = np.take_along_axis(best_ids, order, axis=1)
-                if best_sims is None:
-                    continue
-                if best_sims.shape[1] > keep_top:
-                    order = np.lexsort((best_ids, -best_sims), axis=1)[:, :keep_top]
-                    best_sims = np.take_along_axis(best_sims, order, axis=1)
-                    best_ids = np.take_along_axis(best_ids, order, axis=1)
-                valid = np.isfinite(best_sims)
-                n_per = valid.sum(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "probe_id": np.repeat(pids, n_per),
-                        "nbr_id": best_ids[valid],
-                        "adc": best_sims[valid],
-                    }
-                )
-
-        return scan
-
-    # parallelism floor: the scan's wall is (probes/partitions) x N ADC
-    # work per task — a single-file source would otherwise run the whole
-    # compressed-domain scan in ONE task (the _parallelize rationale in
-    # operators/dedup.py)
-    from .sampling import ensure_min_partitions
-
-    probe_cols = [id_col] + ([group_col] if group_col is not None else []) + [vec_col]
-    probes = ensure_min_partitions(
-        df_norm.select(*probe_cols),
-        spark.sparkContext.defaultParallelism,
-    )
-    sim_schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
-
-    if n_shards == 1:
-        b_index = build_index(indexed)
-        if shortlist is None:
-            # shortlist=None defers C = size_adc_shortlist(|index|) to the
-            # index build itself (r12): the symmetric miners sized C from a
-            # separate norm.count() job whose answer is exactly the index
-            # row count this collect just materialized — same N (codes
-            # cover the normalized corpus by construction), one fewer
-            # driver round-trip per mine.
-            shortlist = size_adc_shortlist(len(b_index.value[0]))
-        # keep the FULL shortlist: exclusions (self/same-group) happen by
-        # mask, never by shrinking the cap — a disjoint index (xcorpus,
-        # kNN join) has no self row, so a |index|-1 cap would silently
-        # drop one valid candidate and break the oracle/sharded parity
-        top = min(shortlist, len(b_index.value[0]))
-        return probes.mapInPandas(make_scan(b_index, top), schema=sim_schema).select(
-            "probe_id", "nbr_id"
-        )
-
-    from pyspark.sql import Window
-
-    if shortlist is None:
-        # sharded path: one cheap count on the already-checkpointed join
-        # replaces the caller's norm.count() job — same N by the coverage
-        # contract
-        shortlist = size_adc_shortlist(indexed.count())
-    shard_outs = []
-    for s in range(n_shards):
-        sub = indexed.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == s
-        )
-        b_index = build_index(sub)
-        # per-shard keep is the FULL shortlist (no n-1 shrink): a pair
-        # with global rank <= C has within-shard rank <= C, so the union
-        # provably contains every global top-C pair
-        shard_outs.append(
-            probes.mapInPandas(make_scan(b_index, shortlist), schema=sim_schema)
-        )
-    union = shard_outs[0]
-    for extra in shard_outs[1:]:
-        union = union.unionByName(extra)
-    # bounded window: <= n_shards * C rows per probe; same total order
-    # as the scan, so the selection is bit-identical to the unsharded
-    # path's top-C
-    w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
-    return (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= shortlist)
-        .select("probe_id", "nbr_id")
+    return _adc_scan_pairs(
+        df_norm, codebook, codes_df, shortlist, dim, m=m, group_col=group_col,
+        id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, nbr_chunk=nbr_chunk,
+        n_shards=n_shards, index_df=index_df,
+        cross_group_only=cross_group_only, validate_coverage=validate_coverage,
     )
 
 
@@ -2595,6 +2685,165 @@ def _exact_rerank_pairs(
             "nbr_id",
         )
         .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
+    )
+
+
+def _pq_index(
+    src: DataFrame,
+    dim: int,
+    m: int,
+    k_codes: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+    codebook: DataFrame | None = None,
+    codes: DataFrame | None = None,
+    norm: DataFrame | None = None,
+    residual: bool = False,
+    home: DataFrame | None = None,
+    anchors: DataFrame | None = None,
+):
+    """The one PQ index builder of every miner and join: use the given
+    index assets, derive the missing ones from `src` — normalize_rounded
+    (checkpointed; `norm` reuses one already built) → residual mode:
+    per-cell anchors over `home` (cell_anchors) and residualize → pq_fit
+    → pq_encode. Returns (codebook, codes, anchors). When every asset
+    the scan needs is given nothing is derived and no job fires; derived
+    assets are flag-identical to persisted ones built the same way (the
+    reuse-identity tests pin this)."""
+    if codebook is not None and codes is not None and (anchors is not None or not residual):
+        return codebook, codes, anchors
+    if norm is None:
+        norm = normalize_rounded(
+            src, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
+        ).localCheckpoint()
+    enc_src, enc_col = norm, "__nv"
+    if residual:
+        if anchors is None:
+            anchors = cell_anchors(
+                norm, home, id_col=id_col, vec_col="__nv", round_dp=round_dp
+            ).localCheckpoint()
+        enc_src, enc_col = residualize(
+            norm.select(id_col, "__nv"), home, anchors,
+            id_col=id_col, vec_col="__nv", out_col="__rv",
+        ), "__rv"
+    if codebook is None:
+        codebook = pq_fit(
+            enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
+            id_col=id_col, vec_col=enc_col, round_dp=round_dp,
+        )
+    if codes is None:
+        codes = pq_encode(enc_src, codebook, dim=dim, m=m, id_col=id_col, vec_col=enc_col)
+    return codebook, codes, anchors
+
+
+def _xcorpus_pairs(
+    queries_df: DataFrame,
+    base_df: DataFrame,
+    dim: int,
+    cells: bool,
+    cross_group_only: bool,
+    group_col: str | None,
+    m: int,
+    k_codes: int,
+    iters: int,
+    shortlist: int | None,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+    max_index_bytes: int,
+    n_shards: int,
+    codebook: DataFrame | None,
+    codes: DataFrame | None,
+    nprobe: int | None = None,
+    k_cells: int | None = None,
+    centroids: DataFrame | None = None,
+    residual: bool = False,
+    anchors: DataFrame | None = None,
+    home: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate stages of the four asymmetric shapes — the flat and
+    cell-pruned cross-corpus miners and kNN joins: the index (quantizer
+    when `cells`, home cells, PQ codebook/codes, residual anchors) is
+    built on or loaded for the BASE only, the queries are normalized
+    (and ranked to their `nprobe` nearest cells), and the one ADC scan
+    returns the top-C (probe_id, nbr_id) shortlist. Defaults: k_cells =
+    ceil(√|base|), nprobe = ceil(k_cells/2), C = size_adc_shortlist(
+    |base|) — one base count serves both. Persisted codes are checked
+    against the live base table (the staleness guard)."""
+    n_base = (
+        base_df.count() if shortlist is None or (cells and k_cells is None) else None
+    )
+    probes = normalize_rounded(
+        queries_df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
+    ).select(id_col, *([group_col] if group_col is not None else []), "__nv")
+    cells_col = None
+    if cells:
+        if k_cells is None:
+            k_cells = max(1, math.isqrt(max(n_base - 1, 0)) + 1)
+        if nprobe is None:
+            nprobe = (k_cells + 1) // 2
+        if centroids is None:
+            _, centroids = kmeans_fit_distributed(
+                base_df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
+                round_dp=round_dp,
+            )
+        if home is None:
+            home = assign_cells_ranked(
+                base_df, centroids, n=1, id_col=id_col, vec_col=vec_col,
+                round_dp=round_dp,
+            ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
+        qcells = assign_cells_ranked(
+            queries_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
+            round_dp=round_dp, out_col="__cells",
+        )
+        probes = probes.join(qcells, id_col)
+        cells_col = "__cells"
+    if shortlist is None:
+        shortlist = size_adc_shortlist(n_base)
+    validate = codes is not None
+    codebook, codes, anchors = _pq_index(
+        base_df, dim, m, k_codes, iters, id_col, vec_col, round_dp,
+        codebook=codebook, codes=codes, residual=residual, home=home,
+        anchors=anchors,
+    )
+    return _adc_scan_pairs(
+        probes, codebook, codes, shortlist, dim, m=m, group_col=group_col,
+        id_col=id_col, vec_col="__nv", round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards, index_df=base_df,
+        cross_group_only=cross_group_only, validate_coverage=validate,
+        home_df=home, cells_col=cells_col, anchors_df=anchors if residual else None,
+    )
+
+
+def _rerank_topk(
+    pairs: DataFrame,
+    queries_df: DataFrame,
+    base_df: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """The kNN-join reducer shared by pq_knn_join and ivfadc_knn_join:
+    exact re-rank of the shortlist, then rank-k per query by (cosine
+    desc, base id) — the lsh_knn_join output contract (query_id,
+    base_id, cosine_sim)."""
+    from pyspark.sql import Window
+
+    scored = _exact_rerank_pairs(
+        pairs, queries_df, base_df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
+    )
+    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select(
+            F.col("probe_id").alias("query_id"),
+            F.col("nbr_id").alias("base_id"),
+            F.col("s").alias("cosine_sim"),
+        )
     )
 
 
@@ -2644,27 +2893,15 @@ def margin_mine_pq(
     norm = normalize_rounded(
         df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
     ).localCheckpoint()
-    # shortlist=None passes through: adc_shortlist_pairs sizes
-    # C = size_adc_shortlist(|index|) from the index rows it collects
-    # anyway (same N as the old norm.count() job — codes cover norm)
-    book = pq_fit(
-        norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-        id_col=id_col, vec_col="__nv", round_dp=round_dp,
+    book, codes, _ = _pq_index(
+        df, dim, m, k_codes, iters, id_col, vec_col, round_dp, norm=norm
     )
-    codes = pq_encode(norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv")
+    # shortlist=None passes through: the scan sizes C from the index rows
+    # it collects anyway (codes cover norm)
     pairs = adc_shortlist_pairs(
-        norm,
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
+        norm, book, codes, shortlist=shortlist, dim=dim, m=m,
+        group_col=group_col, id_col=id_col, vec_col="__nv", round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
     )
     scored = _exact_rerank_pairs(
         pairs, df, df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
@@ -2711,53 +2948,12 @@ def margin_mine_pq_xcorpus(
     |ref|) — the budget scales with the index being probed. Returns the
     margin_mine schema; an unrolled CTE oracle replays the whole
     asymmetric pipeline (queries_llm._margin_pq_xcorpus_oracle)."""
-    new_norm = normalize_rounded(
-        new_df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(ref_df.count())
-    if ref_codebook is None or ref_codes is None:
-        # self-computing path: derive the index in-query (flag-identical
-        # to the persisted-asset path — pinned by tests)
-        ref_norm = normalize_rounded(
-            ref_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        book = (
-            ref_codebook
-            if ref_codebook is not None
-            else pq_fit(
-                ref_norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col="__nv", round_dp=round_dp,
-            )
-        )
-        codes = (
-            ref_codes
-            if ref_codes is not None
-            else pq_encode(
-                ref_norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv"
-            )
-        )
-    else:
-        # persisted-asset path: the index side never touches normalization
-        # at all — adc_shortlist_pairs only needs (id, group) from it
-        book, codes = ref_codebook, ref_codes
-    pairs = adc_shortlist_pairs(
-        new_norm.select(id_col, group_col, "__nv"),
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
-        index_df=ref_df,
-        # persisted codes can drift from the live ref table — guard it
-        validate_coverage=ref_codes is not None,
+    pairs = _xcorpus_pairs(
+        new_df, ref_df, dim, cells=False, cross_group_only=True,
+        group_col=group_col, m=m, k_codes=k_codes, iters=iters,
+        shortlist=shortlist, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=ref_codebook, codes=ref_codes,
     )
     scored = _exact_rerank_pairs(
         pairs, new_df, ref_df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
@@ -2799,69 +2995,14 @@ def pq_knn_join(
     schema changes. `group_col=None` (the default) matches that
     contract exactly: general ANN never reads groups — only a vector's
     own row is excluded."""
-    q_norm = normalize_rounded(
-        queries_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
+    pairs = _xcorpus_pairs(
+        queries_df, base_df, dim, cells=False, cross_group_only=False,
+        group_col=group_col, m=m, k_codes=k_codes, iters=iters,
+        shortlist=shortlist, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=base_codebook, codes=base_codes,
     )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(base_df.count())
-    if base_codebook is None or base_codes is None:
-        base_norm = normalize_rounded(
-            base_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        book = (
-            base_codebook
-            if base_codebook is not None
-            else pq_fit(
-                base_norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col="__nv", round_dp=round_dp,
-            )
-        )
-        codes = (
-            base_codes
-            if base_codes is not None
-            else pq_encode(
-                base_norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv"
-            )
-        )
-    else:
-        book, codes = base_codebook, base_codes
-    probe_cols = [id_col] + ([group_col] if group_col is not None else []) + ["__nv"]
-    pairs = adc_shortlist_pairs(
-        q_norm.select(*probe_cols),
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
-        index_df=base_df,
-        cross_group_only=False,
-        # persisted codes can drift from the live base table — guard it
-        validate_coverage=base_codes is not None,
-    )
-    from pyspark.sql import Window
-
-    scored = _exact_rerank_pairs(
-        pairs, queries_df, base_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("probe_id").alias("query_id"),
-            F.col("nbr_id").alias("base_id"),
-            F.col("s").alias("cosine_sim"),
-        )
-    )
+    return _rerank_topk(pairs, queries_df, base_df, k, id_col, vec_col, round_dp)
 
 
 def pq_index_save(codebook: DataFrame, codes_df: DataFrame, path: str) -> str:
@@ -3084,106 +3225,6 @@ def residualize(
     )
 
 
-def _make_ivfadc_scan(
-    b_index,
-    top: int,
-    emit_adc: bool,
-    code_mats,
-    m: int,
-    sub_dim: int,
-    dim: int,
-    id_col: str,
-    group_col: str | None,
-    vec_col: str,
-    cells_col: str,
-    round_dp: int,
-    cross_group_only: bool,
-):
-    """mapInPandas kernel for the inverted-file ADC scan — factored out
-    of ivfadc_shortlist_pairs so the unsharded path and every cell shard
-    run literally the same arithmetic (the bit-identity argument of the
-    sharded re-merge rests on this). `emit_adc` adds the rounded ADC
-    score column the sharded union re-merges on; the unsharded path
-    omits it to keep the (probe_id, nbr_id) output contract."""
-    import numpy as np
-    import pandas as pd
-
-    def scan(batches):
-        ids_a, grps_a, codes_a, slices, anchors = b_index.value
-        for pdf in batches:
-            if pdf.empty or len(ids_a) == 0 or top == 0:
-                continue
-            X = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf[vec_col]]
-            )
-            pids = pdf[id_col].to_numpy()
-            pgrps = pdf[group_col].to_numpy() if cross_group_only else None
-            luts = _adc_luts(X, code_mats, m, sub_dim)
-            # invert: cell -> probe rows that probe it (iteration order is
-            # irrelevant — the final merge is a total order)
-            cell_rows: dict[int, list[int]] = {}
-            for i, cl in enumerate(pdf[cells_col]):
-                for c in cl:
-                    if int(c) in slices:
-                        cell_rows.setdefault(int(c), []).append(i)
-            best: list[list] = [[] for _ in range(len(pids))]
-            for c, rows in cell_rows.items():
-                lo, hi = slices[c]
-                rp = np.array(rows, dtype=np.int64)
-                if anchors is not None:
-                    # residual mode: seed the ADC totals with the probe's
-                    # anchor term ⟨q, av(cell)⟩, accumulated sequentially
-                    # over the dim coordinates (no BLAS reassociation) so
-                    # the oracle's list_sum fold replays it, THEN add the
-                    # m LUT partials in ascending sub order — left-to-right
-                    # exactly like the SQL's qa + l0 + … + l15
-                    a_c = anchors[c]
-                    xs = X[rp]
-                    qc = np.zeros(len(rp), dtype=np.float64)
-                    for i2 in range(dim):
-                        qc += xs[:, i2] * a_c[i2]
-                    adc = np.repeat(qc[:, None], hi - lo, axis=1)
-                else:
-                    adc = np.zeros((len(rp), hi - lo), dtype=np.float64)
-                for j in range(m):
-                    adc += luts[j][rp][:, codes_a[lo:hi, j]]
-                adc = np.round(adc, round_dp)
-                if cross_group_only:
-                    adc[pgrps[rp][:, None] == grps_a[None, lo:hi]] = -np.inf
-                else:
-                    adc[pids[rp][:, None] == ids_a[None, lo:hi]] = -np.inf
-                keep = min(top, hi - lo)
-                part = np.argsort(-adc, axis=1, kind="stable")[:, :keep]
-                sims = np.take_along_axis(adc, part, axis=1)
-                nids = ids_a[lo:hi][part]
-                for t in range(len(rp)):
-                    best[rp[t]].append((sims[t], nids[t]))
-            out_pids, out_nids, out_sims = [], [], []
-            for i, cand in enumerate(best):
-                if not cand:
-                    continue
-                s = np.concatenate([x[0] for x in cand])
-                d = np.concatenate([x[1] for x in cand])
-                keep_n = min(top, len(s))
-                order_i = np.lexsort((d, -s))[:keep_n]
-                s, d = s[order_i], d[order_i]
-                fin = np.isfinite(s)
-                if fin.any():
-                    out_pids.append(np.full(int(fin.sum()), pids[i]))
-                    out_nids.append(d[fin])
-                    out_sims.append(s[fin])
-            if out_pids:
-                out = {
-                    "probe_id": np.concatenate(out_pids),
-                    "nbr_id": np.concatenate(out_nids),
-                }
-                if emit_adc:
-                    out["adc"] = np.concatenate(out_sims)
-                yield pd.DataFrame(out)
-
-    return scan
-
-
 def ivfadc_shortlist_pairs(
     probes_df: DataFrame,
     codebook: DataFrame,
@@ -3209,7 +3250,9 @@ def ivfadc_shortlist_pairs(
     of the probe's probed cells. Returns (probe_id, nbr_id) — the
     adc_shortlist_pairs contract with the Θ(N²·m) flat scan replaced by
     Θ(Σ_probes Σ_{probed cells} |cell|·m), i.e. ~nprobe/k of the flat
-    compute.
+    compute. Both run the same inverted-file scan (_adc_scan_pairs):
+    the flat scan is its one-cell case, so probing every cell
+    reproduces it exactly.
 
     RESIDUAL mode (`anchors_df` given — (cell, av) from cell_anchors):
     `codes_df` then holds PQ codes of the RESIDUALS r = nv − av(home),
@@ -3234,200 +3277,28 @@ def ivfadc_shortlist_pairs(
     as slice offsets into one broadcast array instead of a partitioned
     table (the index is guarded RAM-resident, same residency contract
     and `max_index_bytes` raise as the flat scan; past the budget, pass
-    `n_cell_shards > 1` — the CELLS are hash-partitioned across
-    broadcasts, each shard scans whole cells with the full shortlist
-    cap, and the per-shard top-C unions re-merge through the same
-    bounded (adc desc, nbr_id) window as adc_shortlist_pairs' tested
-    n_shards path, bit-identical to the unsharded scan while keeping
-    the cell PRUNING that the flat fallback loses).
+    `n_cell_shards > 1` — the index rows hash-partition by id across
+    broadcasts exactly like adc_shortlist_pairs' n_shards, each shard
+    scans its part of every probed cell with the full shortlist cap,
+    and the per-shard top-C unions re-merge through the same bounded
+    (adc desc, nbr_id) window, bit-identical to the unsharded scan
+    while keeping the cell PRUNING that the flat fallback loses).
 
     Determinism (oracle-replayable, the adc_shortlist_pairs contract):
     LUT inner products accumulate sequentially (_adc_luts), per-sub
     partials add in ascending sub order, ADC totals round to `round_dp`
-    BEFORE ranking, within-cell ties break to the lowest nbr_id (codes
-    id-ascending inside each cell slice + stable argsort), and the
-    cross-cell merge re-sorts the per-cell survivors by the same
+    BEFORE ranking, and the running per-probe merge ranks by the
     (adc desc, nbr_id) TOTAL order — so the emitted top-C is identical
     to ranking the cell-restricted candidate set in one SQL window, and
-    is independent of cell iteration order (each global top-C candidate
-    survives its own cell's local top-C)."""
-    import numpy as np
-
-    if shortlist < 1:
-        raise ValueError(
-            f"ivfadc_shortlist_pairs requires shortlist >= 1, got {shortlist}"
-        )
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if cross_group_only and group_col is None:
-        raise ValueError("cross_group_only=True requires a group_col")
-    if n_cell_shards < 1:
-        raise ValueError(f"n_cell_shards must be >= 1, got {n_cell_shards}")
-    sub_dim = dim // m
-    books = _codebook_matrices(codebook.collect())
-    code_mats = [books[j][1] for j in range(m)]
-    spark = probes_df.sparkSession
-
-    index_src = index_df if index_df is not None else probes_df
-    grp_expr = (
-        F.col(group_col).alias("__g")
-        if group_col is not None
-        else F.lit("").alias("__g")
-    )
-    indexed = (
-        codes_df.join(index_src.select(F.col(id_col), grp_expr), id_col)
-        .join(home_df.select(F.col(id_col), F.col("cell").alias("__cell")), id_col)
-        .select(id_col, "__g", "__cell", "codes")
-    )
-    if validate_coverage:
-        # staleness guard (the adc_shortlist_pairs convention, ADVICE r7
-        # applied to the cell-pruned family): codes, home cells, and index
-        # ids must match EXACTLY — an inner join would otherwise silently
-        # scan only the intersection of a stale persisted index
-        n_codes = codes_df.count()
-        n_index = index_src.count()
-        n_joined = indexed.count()
-        if not (n_codes == n_index == n_joined):
-            raise ValueError(
-                f"stale IVFADC index: codes+home cover {n_joined} of "
-                f"{n_index} index rows ({n_codes} code rows) — rebuild the "
-                "persisted assets (quantizer, home cells, codes, anchors) "
-                "on the current index table so ids match exactly. If "
-                "rebuilding does not fix it, the index table contains "
-                "zero-norm vectors (normalize_rounded drops them by "
-                "contract) — filter those rows out of the index first"
-            )
-    anchor_map: dict[int, "np.ndarray"] | None = None
-    if anchors_df is not None:
-        anchor_map = {
-            int(r["cell"]): np.asarray(r["av"], dtype=np.float64)
-            for r in anchors_df.collect()
-        }
-
-    def build_cell_index(sub):
-        """Inverted-file layout for one (sub)set of the CELLS: one
-        collect, rows sorted by (cell, id) so each cell is a contiguous,
-        id-ascending slice of the broadcast arrays. The residency guard
-        applies to what is collected HERE — per cell shard when
-        n_cell_shards > 1 — so sharding is exactly how an index past the
-        budget becomes buildable."""
-        idx_rows = sub.collect()
-        n_idx = len(idx_rows)
-        idx_bytes = n_idx * (m + 24)  # m codes + id/group/cell bookkeeping
-        if idx_bytes > max_index_bytes:
-            raise ValueError(
-                f"IVFADC index (cell shard) would be ~{idx_bytes} bytes for "
-                f"{n_idx} vectors at m={m}, over the {max_index_bytes} "
-                "residency budget — raise n_cell_shards (the cell-sharded "
-                "broadcast path, bit-identical re-merge) or use "
-                "adc_shortlist_pairs(n_shards=...)"
-            )
-        nbr_ids = np.array([r[id_col] for r in idx_rows], dtype=np.int64)
-        nbr_grps = np.array([r["__g"] for r in idx_rows])
-        nbr_cells = np.array([r["__cell"] for r in idx_rows], dtype=np.int64)
-        nbr_codes = (
-            np.array([r["codes"] for r in idx_rows], dtype=np.int64)
-            if n_idx
-            else np.zeros((0, m), dtype=np.int64)
-        )
-        order = np.lexsort((nbr_ids, nbr_cells))
-        nbr_ids, nbr_grps, nbr_cells, nbr_codes = (
-            nbr_ids[order], nbr_grps[order], nbr_cells[order], nbr_codes[order],
-        )
-        # cell -> (start, end) slice offsets into the sorted arrays
-        cell_slices: dict[int, tuple[int, int]] = {}
-        if n_idx:
-            bounds = np.flatnonzero(np.diff(nbr_cells)) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [n_idx]])
-            cell_slices = {
-                int(nbr_cells[s]): (int(s), int(e)) for s, e in zip(starts, ends)
-            }
-        if anchor_map is not None:
-            missing = set(cell_slices) - set(anchor_map)
-            if missing:
-                raise ValueError(
-                    "residual IVFADC: anchors_df is missing anchors for "
-                    f"occupied cells {sorted(missing)[:5]}… — anchors must "
-                    "come from the same corpus/home assignment as codes_df"
-                )
-        return (
-            spark.sparkContext.broadcast(
-                (nbr_ids, nbr_grps, nbr_codes, cell_slices, anchor_map)
-            ),
-            n_idx,
-        )
-
-    id_type = probes_df.schema[id_col].dataType.simpleString()
-
-    def make_scan(b_index, top, emit_adc):
-        return _make_ivfadc_scan(
-            b_index, top, emit_adc, code_mats, m, sub_dim, dim,
-            id_col, group_col, vec_col, cells_col, round_dp, cross_group_only,
-        )
-
-    from .sampling import ensure_min_partitions
-
-    probe_cols = (
-        [id_col] + ([group_col] if group_col is not None else [])
-        + [vec_col, cells_col]
-    )
-
-    def make_probes():
-        # built AFTER the index(es): the anchor-coverage/staleness raises
-        # must fire before any probe-side analysis error (a bad vec_col
-        # would otherwise mask the index problem — pinned by test)
-        return ensure_min_partitions(
-            probes_df.select(*probe_cols),
-            spark.sparkContext.defaultParallelism,
-        )
-
-    if n_cell_shards == 1:
-        b_index, n_idx = build_cell_index(indexed)
-        top = min(shortlist, n_idx) if n_idx else 0
-        sim_schema = f"probe_id {id_type}, nbr_id {id_type}"
-        return make_probes().mapInPandas(
-            make_scan(b_index, top, emit_adc=False), schema=sim_schema
-        ).select("probe_id", "nbr_id")
-
-    # beyond-residency path (VERDICT r8 item 3): shard the CELLS across
-    # broadcasts. Each shard holds a subset of the inverted file — whole
-    # cells only, a cell's slice is never split — scans with the FULL
-    # shortlist cap, and emits its per-probe top-C WITH the rounded adc
-    # scores; the union re-merges by the same (adc desc, nbr_id) total
-    # order. A pair with global rank <= C has rank <= C within its own
-    # cell's shard, so the union provably contains every global top-C
-    # pair and the window selection is bit-identical to the unsharded
-    # scan (adc_shortlist_pairs' tested n_shards argument, applied to
-    # cells so the PRUNING survives past residency instead of falling
-    # back to the flat sharded scan). The residency guard bounds each
-    # per-shard collect/broadcast; the re-merge window is bounded at
-    # n_cell_shards * C rows per probe.
-    from pyspark.sql import Window
-
-    sim_schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
-    shard_indexes = []
-    for s in range(n_cell_shards):
-        sub = indexed.filter(
-            F.pmod(F.xxhash64(F.col("__cell").cast("long")), F.lit(n_cell_shards))
-            == s
-        )
-        shard_indexes.append(build_cell_index(sub)[0])
-    probes = make_probes()
-    shard_outs = [
-        probes.mapInPandas(
-            make_scan(b_index, shortlist, emit_adc=True), schema=sim_schema
-        )
-        for b_index in shard_indexes
-    ]
-    union = shard_outs[0]
-    for extra in shard_outs[1:]:
-        union = union.unionByName(extra)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
-    return (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= shortlist)
-        .select("probe_id", "nbr_id")
+    is independent of cell iteration order and chunking (each global
+    top-C candidate survives its own cell's local top-C)."""
+    return _adc_scan_pairs(
+        probes_df, codebook, codes_df, shortlist, dim, m=m, group_col=group_col,
+        id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_cell_shards,
+        index_df=index_df, cross_group_only=cross_group_only,
+        validate_coverage=validate_coverage, home_df=home_df,
+        cells_col=cells_col, anchors_df=anchors_df,
     )
 
 
@@ -3486,8 +3357,9 @@ def margin_mine_ivfadc(
         norm = normalize_rounded(
             df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
         ).localCheckpoint()
+    n = norm.count() if k_cells is None or shortlist is None else None
     if k_cells is None:
-        k_cells = max(1, math.isqrt(max(norm.count() - 1, 0)) + 1)
+        k_cells = max(1, math.isqrt(max(n - 1, 0)) + 1)
     if centroids is None:
         _, centroids = kmeans_fit_distributed(
             df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
@@ -3499,31 +3371,15 @@ def margin_mine_ivfadc(
             round_dp=round_dp,
         ).localCheckpoint()
     if shortlist is None:
-        shortlist = size_adc_shortlist(norm.count())
+        shortlist = size_adc_shortlist(n)
     home = ranked_cells.select(
         F.col(id_col), F.element_at("cells", 1).alias("cell")
     )
-    if residual:
-        if anchors is None:
-            anchors = cell_anchors(
-                norm, home, id_col=id_col, vec_col="__nv", round_dp=round_dp
-            ).localCheckpoint()
-        enc_src = residualize(
-            norm.select(id_col, "__nv"), home, anchors,
-            id_col=id_col, vec_col="__nv", out_col="__rv",
-        )
-        enc_col = "__rv"
-    else:
-        enc_src, enc_col = norm, "__nv"
-    if codebook is None:
-        codebook = pq_fit(
-            enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-            id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-        )
-    if codes is None:
-        codes = pq_encode(
-            enc_src, codebook, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-        )
+    codebook, codes, anchors = _pq_index(
+        df, dim, m, k_codes, iters, id_col, vec_col, round_dp,
+        codebook=codebook, codes=codes, norm=norm, residual=residual,
+        home=home, anchors=anchors,
+    )
     probes = norm.select(id_col, group_col, "__nv").join(
         ranked_cells.select(
             F.col(id_col), F.slice("cells", 1, nprobe).alias("__cells")
@@ -3531,21 +3387,11 @@ def margin_mine_ivfadc(
         id_col,
     )
     pairs = ivfadc_shortlist_pairs(
-        probes,
-        codebook,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
+        probes, codebook, codes, home, shortlist=shortlist, dim=dim, m=m,
+        group_col=group_col, id_col=id_col, vec_col="__nv",
+        cells_col="__cells", round_dp=round_dp,
         max_index_bytes=max_index_bytes,
-        anchors_df=anchors if residual else None,
-        n_cell_shards=n_cell_shards,
+        anchors_df=anchors if residual else None, n_cell_shards=n_cell_shards,
     )
     scored = _exact_rerank_pairs(
         pairs, df, df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
@@ -3596,109 +3442,16 @@ def ivfadc_knn_join(
     `base_anchors`), and each query's ADC score seeds with its
     anchor inner product — finer ranking from the same code bytes, so
     fewer true neighbors fall outside the top-C at the same nprobe."""
-    if k_cells is None:
-        k_cells = max(1, math.isqrt(max(base_df.count() - 1, 0)) + 1)
-    if nprobe is None:
-        nprobe = (k_cells + 1) // 2
-    if centroids is None:
-        _, centroids = kmeans_fit_distributed(
-            base_df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        )
-    home = (
-        base_home
-        if base_home is not None
-        else assign_cells_ranked(
-            base_df, centroids, n=1, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
+    pairs = _xcorpus_pairs(
+        queries_df, base_df, dim, cells=True, cross_group_only=False,
+        group_col=None, m=m, k_codes=k_codes, iters=iters,
+        shortlist=shortlist, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_cell_shards,
+        codebook=base_codebook, codes=base_codes, nprobe=nprobe,
+        k_cells=k_cells, centroids=centroids, residual=residual,
+        anchors=base_anchors, home=base_home,
     )
-    qcells = assign_cells_ranked(
-        queries_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    q_norm = normalize_rounded(
-        queries_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(base_df.count())
-    if base_codebook is None or base_codes is None or (
-        residual and base_anchors is None
-    ):
-        base_norm = normalize_rounded(
-            base_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        if residual:
-            if base_anchors is None:
-                base_anchors = cell_anchors(
-                    base_norm, home, id_col=id_col, vec_col="__nv",
-                    round_dp=round_dp,
-                ).localCheckpoint()
-            enc_src = residualize(
-                base_norm.select(id_col, "__nv"), home, base_anchors,
-                id_col=id_col, vec_col="__nv", out_col="__rv",
-            )
-            enc_col = "__rv"
-        else:
-            enc_src, enc_col = base_norm, "__nv"
-        book = (
-            base_codebook
-            if base_codebook is not None
-            else pq_fit(
-                enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-            )
-        )
-        codes = (
-            base_codes
-            if base_codes is not None
-            else pq_encode(
-                enc_src, book, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-            )
-        )
-    else:
-        book, codes = base_codebook, base_codes
-    probes = q_norm.select(id_col, "__nv").join(
-        qcells.select(F.col(id_col), F.col("cells").alias("__cells")), id_col
-    )
-    pairs = ivfadc_shortlist_pairs(
-        probes,
-        book,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=None,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        index_df=base_df,
-        cross_group_only=False,
-        anchors_df=base_anchors if residual else None,
-        validate_coverage=base_codes is not None,
-        n_cell_shards=n_cell_shards,
-    )
-    from pyspark.sql import Window
-
-    scored = _exact_rerank_pairs(
-        pairs, queries_df, base_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("probe_id").alias("query_id"),
-            F.col("nbr_id").alias("base_id"),
-            F.col("s").alias("cosine_sim"),
-        )
-    )
+    return _rerank_topk(pairs, queries_df, base_df, k, id_col, vec_col, round_dp)
 
 
 def margin_mine_ivfadc_xcorpus(
@@ -3743,95 +3496,16 @@ def margin_mine_ivfadc_xcorpus(
     certified self-mining decisions bound from above at the driver
     scales. nprobe = k_cells reproduces margin_mine_pq_xcorpus
     bit-identically (tested)."""
-    if k_cells is None:
-        k_cells = max(1, math.isqrt(max(ref_df.count() - 1, 0)) + 1)
-    if nprobe is None:
-        nprobe = (k_cells + 1) // 2
-    if centroids is None:
-        _, centroids = kmeans_fit_distributed(
-            ref_df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        )
-    home = (
-        ref_home
-        if ref_home is not None
-        else assign_cells_ranked(
-            ref_df, centroids, n=1, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
-    )
-    qcells = assign_cells_ranked(
-        new_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    new_norm = normalize_rounded(
-        new_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(ref_df.count())
-    if ref_codebook is None or ref_codes is None or (
-        residual and ref_anchors is None
-    ):
-        ref_norm = normalize_rounded(
-            ref_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        if residual:
-            if ref_anchors is None:
-                ref_anchors = cell_anchors(
-                    ref_norm, home, id_col=id_col, vec_col="__nv",
-                    round_dp=round_dp,
-                ).localCheckpoint()
-            enc_src = residualize(
-                ref_norm.select(id_col, "__nv"), home, ref_anchors,
-                id_col=id_col, vec_col="__nv", out_col="__rv",
-            )
-            enc_col = "__rv"
-        else:
-            enc_src, enc_col = ref_norm, "__nv"
-        book = (
-            ref_codebook
-            if ref_codebook is not None
-            else pq_fit(
-                enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-            )
-        )
-        codes = (
-            ref_codes
-            if ref_codes is not None
-            else pq_encode(
-                enc_src, book, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-            )
-        )
-    else:
-        book, codes = ref_codebook, ref_codes
-    probes = new_norm.select(id_col, group_col, "__nv").join(
-        qcells.select(F.col(id_col), F.col("cells").alias("__cells")), id_col
-    )
-    pairs = ivfadc_shortlist_pairs(
-        probes,
-        book,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        index_df=ref_df,
-        cross_group_only=True,
-        anchors_df=ref_anchors if residual else None,
-        validate_coverage=ref_codes is not None,
-        n_cell_shards=n_cell_shards,
+    pairs = _xcorpus_pairs(
+        new_df, ref_df, dim, cells=True, cross_group_only=True,
+        group_col=group_col, m=m, k_codes=k_codes, iters=iters,
+        shortlist=shortlist, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_cell_shards,
+        codebook=ref_codebook, codes=ref_codes, nprobe=nprobe,
+        k_cells=k_cells, centroids=centroids, residual=residual,
+        anchors=ref_anchors, home=ref_home,
     )
     scored = _exact_rerank_pairs(
-        pairs, new_df, ref_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
+        pairs, new_df, ref_df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
     )
     return _margin_top2(scored, min_margin_x10k)

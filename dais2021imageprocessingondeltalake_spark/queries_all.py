@@ -1,7 +1,8 @@
 """Import every query module so the registry is fully populated.
 
 `__spark_entry__.py`, bench.py, and the tests all import this module to
-get the complete driver-contract surface.
+get the complete driver-contract surface. Consumers look queries up by
+name; registry iteration order carries no meaning.
 """
 
 from __future__ import annotations
@@ -19,480 +20,3 @@ from . import queries_sketches  # noqa: F401
 from . import queries_profiling  # noqa: F401
 
 from .registry import REGISTRY, headline_queries, oracle_sql, queries  # noqa: F401,E402
-
-# --- Driver CORRECTNESS-window steering -------------------------------------
-#
-# The driver's per-round CORRECTNESS gate checks exactly the FIRST 50 entries
-# of ``queries()`` in registration order (CORRECTNESS_r01 and _r02 are both
-# precisely that prefix of the r1/r2 registries). DRIVER_WINDOW therefore
-# pins which 50 queries receive a driver-certified oracle row this round:
-# every SURVEY.md §2-declared query id stays resident, and the remaining
-# slots carry the LLM dedup / ANN / curation north-star tier that rounds 1-2
-# never got gated.
-#
-# Queries outside the window remain fully registered — the driver still sees
-# them via ``queries()``/``oracle_sql()`` and the repo's own dual-scale sweep
-# (tools/verify_sweep.py) checks every oracle at sf0.01 AND sf0.1 each round.
-#
-# Window changes r10 -> r11 (per VERDICT r10 item 1; nothing unregistered):
-# - The 15 r10-certified rotating slots (UniMax/fused/m-axis/residual-shape
-#   tier — all green in CORRECTNESS_r10) rotate to the queue tail.
-# - In come the 15 ids VERDICT r10 item 1 names: the never-re-gated r6
-#   statistical tier (q_spearman, q_ndcg, q_lang_f1,
-#   q_stream_shard_manifest), the streaming state tier (q_stream_static_join
-#   ... q_stream_heavy_hitters, 8 ids), and the r3 statistical/certified
-#   carry (q_curate_v2, q_temperature_mix, q_token_budget).
-
-DRIVER_WINDOW: tuple[str, ...] = (
-    # SURVEY §2 resident set (35)
-    "q_scan_table",
-    "q_project",
-    "q_filter",
-    "q_cast",
-    "q_null_cast",
-    "q_struct_ops",
-    "q_join_inner",
-    "q_join_left",
-    "q_join_anti",
-    "q_label_index_join",
-    "q_count",
-    "q_distinct",
-    "q_count_distinct",
-    "q_groupby_agg",
-    "q_orderby",
-    "q_topk",
-    "q_limit",
-    "q_union",
-    "q_except_intersect",
-    "q_regexp_extract",
-    "q_string_funcs",
-    "q_json_funcs",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_array_funcs",
-    "q_udf_struct",
-    "q_apply_in_pandas",
-    "q_map_in_pandas",
-    "q_model_udf",
-    "q_udaf_pandas",
-    "q_random_split",
-    "q_write_roundtrip",
-    "q_scan_binary",
-    "q_stream_agg",
-    "q_stream_window",
-    # Rotation head promoted for r12 (VERDICT r11 item 8): the r11-built
-    # composites first (q_margin_mine_routed / q_margin_recall_sampled —
-    # registered and sweep-verified but never driver-gated), then the
-    # remaining round-3 statistical/certified additions from the queue head.
-    "q_margin_mine_routed",
-    "q_margin_recall_sampled",
-    "q_padding_waste",
-    "q_dsir_score",
-    "q_hybrid_search",
-    "q_containment",
-    "q_minhash_oph",
-    "q_time_travel",
-    "q_forget_rows",
-    "q_novelty",
-    "q_weighted_sample",
-    "q_split_alloc",
-    "q_pii_redact",
-    "q_pagerank",
-    "q_funnel",
-)
-
-# --- Promoted-set ledger (VERDICT r5 item 1b) --------------------------------
-# One place that records, per round, which rotating ids were promoted INTO
-# the driver window that round. The lockstep test asserts only the CURRENT
-# round's promotions are window-resident; prior rounds' ids need only stay
-# registered (their green rows are history, and the dual-scale sweep keeps
-# checking their oracles). Rotations update CURRENT_ROUND + append one entry
-# here instead of hand-editing a test.
-CURRENT_ROUND = 12
-PROMOTED_LEDGER: dict[int, tuple[str, ...]] = {
-    4: (
-        "q_minhash_lsh_md5",
-        "q_flagship_revenue",
-        "q_join_semi",
-        "q_map_funcs",
-        "q_tpch_pricing",
-        "q_tpch_shipping_priority",
-        "q_tpch_order_priority",
-        "q_tpch_customer_distribution",
-        "q_tpch_min_cost_supplier",
-        "q_tpch_large_orders",
-        "q_tpch_idle_customers",
-        "q_tpch_local_volume",
-        "q_tpch_revenue_change",
-        "q_tpch_volume_shipping",
-        "q_tpch_market_share",
-    ),
-    5: (
-        "q_tpch_product_profit",
-        "q_tpch_returned_items",
-        "q_tpch_promo_revenue",
-        "q_tpch_top_supplier",
-        "q_tpch_small_qty_revenue",
-        "q_tpch_disjunctive_revenue",
-        "q_tpch_important_stock",
-        "q_tpch_priority_lines",
-        "q_tpch_supplier_cnt",
-        "q_tpch_part_promotion",
-        "q_tpch_waiting_supplier",
-        "q_stream_dedup",
-        "q_stream_left_join",
-        "q_stateful_stream",
-        "q_stream_join",
-    ),
-    6: (
-        "q_tpch_priority_lines",
-        "q_dedup_exact",
-        "q_minhash_lsh_md5",
-        "q_dedup_clusters",
-        "q_dedup_end2end",
-        "q_cross_dedup",
-        "q_decontaminate",
-        "q_embedding_ann",
-        "q_text_stats",
-        "q_llm_pipeline",
-        "q_curate_end2end",
-        "q_bm25",
-        "q_semdedup",
-        "q_margin_mine_lsh",
-        "q_margin_lsh_recall",
-    ),
-    7: (
-        "q_logreg_fit",
-        "q_logreg_filter",
-        "q_logreg_grid",
-        "q_logreg_holdout",
-        "q_logreg_calibration",
-        "q_pack_sequences",
-        "q_stream_pack",
-        "q_margin_mine_ivf",
-        "q_margin_ivf_recall",
-        "q_margin_ivf_curve",
-        "q_orc_roundtrip",
-        "q_shard_manifest",
-        "q_negative_sample",
-        "q_epoch_shuffle",
-        "q_profile_drift",
-    ),
-    8: (
-        "q_margin_mine_pq",
-        "q_margin_pq_recall",
-        "q_margin_pq_sharded",
-        "q_margin_pq_xcorpus",
-        "q_margin_xcorpus_recall",
-        "q_stream_margin_pq",
-        "q_bitext_pack",
-        "q_hard_negatives",
-        "q_knn_join_pq",
-        "q_margin_nprobe_sized",
-        "q_ngram_jaccard_prefix",
-        "q_dedup_spans",
-        "q_embedding_topk",
-        "q_embedding_ann_q8",
-        "q_experiment_tracking",
-    ),
-    9: (
-        "q_margin_ivfadc_curve",
-        "q_margin_ivfadc_sized",
-        "q_margin_mine_ivfadc",
-        "q_margin_pq_c_curve",
-        "q_margin_c_sized",
-        "q_knn_join_ivfadc",
-        "q_margin_ivfadc_xcorpus",
-        "q_stream_margin_ivfadc",
-        "q_margin_ivfadc_res_curve",
-        "q_margin_ivfadc_res_sized",
-        "q_margin_mine_ivfadc_res",
-        "q_kcenter_select",
-        "q_mmr_select",
-        "q_domain_reweight",
-        "q_reweight_apply",
-    ),
-    10: (
-        "q_unimax_alloc",
-        "q_unimax_manifest",
-        "q_stream_unimax",
-        "q_unimax_pack",
-        "q_kcenter_fused",
-        "q_mmr_fused",
-        "q_margin_pq_m_curve",
-        "q_margin_m_sized",
-        "q_margin_ivfadc_res_xcorpus",
-        "q_knn_join_ivfadc_res",
-        "q_stream_margin_ivfadc_res",
-        "q_embedding_pq_cert",
-        "q_embedding_pq_ann",
-        "q_stream_drift",
-        "q_auc_ranked",
-    ),
-    11: (
-        "q_spearman",
-        "q_ndcg",
-        "q_lang_f1",
-        "q_stream_shard_manifest",
-        "q_stream_static_join",
-        "q_stream_dedup_watermark",
-        "q_stream_session_window",
-        "q_stream_scd2",
-        "q_stream_curate",
-        "q_stream_cross_dedup",
-        "q_stream_cms",
-        "q_stream_heavy_hitters",
-        "q_curate_v2",
-        "q_temperature_mix",
-        "q_token_budget",
-    ),
-    12: (
-        "q_margin_mine_routed",
-        "q_margin_recall_sampled",
-        "q_padding_waste",
-        "q_dsir_score",
-        "q_hybrid_search",
-        "q_containment",
-        "q_minhash_oph",
-        "q_time_travel",
-        "q_forget_rows",
-        "q_novelty",
-        "q_weighted_sample",
-        "q_split_alloc",
-        "q_pii_redact",
-        "q_pagerank",
-        "q_funnel",
-    ),
-}
-
-# Priority order for slots 51+; ids not listed here follow in their original
-# registration order. Rounds 7+ rotate these into freed window slots.
-ROTATION_QUEUE: tuple[str, ...] = (
-    # r13 head: the remaining round-3 statistical/certified additions
-    # (certified by the r3/r4 dual-scale sweeps, never driver-gated);
-    # the previous queue head (q_margin_mine_routed ... q_funnel) was
-    # promoted into the r12 window per VERDICT r11 item 8.
-    "q_cohort_retention",
-    "q_collocations",
-    "q_embedding_rp",
-    "q_bpe_pair_counts",
-    "q_zipf_slope",
-    "q_vocab_coverage",
-    "q_ngram_growth",
-    "q_oov_rate",
-    "q_doclen_percentiles",
-    "q_lang_confusion",
-    "q_udtf_chunks",
-    "q_variant",
-    "q_dedup_quality",
-    "q_dup_cluster_sizes",
-    "q_ann_quality",
-    "q_kmeans_fit_cert",
-    "q_doc_cluster",
-    "q_embedding_ivf_cert",
-    "q_bpe_merges",
-    "q_bpe_fertility",
-    "q_fuzzy_join",
-    "q_dedup_triangles",
-    "q_data_profile",
-    "q_integrity_checks",
-    "q_version_diff",
-    "q_incremental_agg",
-    "q_rolling_window",
-    "q_ab_test",
-    "q_csv_roundtrip",
-    "q_jsonl_roundtrip",
-    "q_basket_lift",
-    "q_rolling_wau",
-    "q_stickiness",
-    "q_heavy_hitters",
-    "q_count_min",
-    "q_bigram_ppl",
-    "q_bloom_join",
-    "q_embedding_gram",
-    "q_embedding_pca",
-    "q_graph_bfs",
-    "q_label_prop",
-    "q_mad_outliers",
-    "q_source_kl",
-    "q_groupwise_ols",
-    "q_chi2_independence",
-    "q_salted_agg",
-    "q_salted_join",
-    "q_zorder_layout",
-    "q_label_silhouette",
-    "q_burst_detection",
-    "q_graph_hits",
-    "q_margin_mine",
-    "q_feature_hash",
-    "q_recursive_cte",
-    "q_revenue_share",
-    "q_survival_curve",
-    "q_cohens_kappa",
-    "q_gini_spend",
-    "q_token_entropy",
-    "q_skew_diagnosis",
-    "q_share_of_parent",
-    "q_psi_drift",
-    "q_top_paths",
-    "q_mutual_info",
-    "q_hhi_sources",
-    "q_tfidf_cosine",
-    "q_pareto_deciles",
-    "q_global_rank",
-    "q_minhash_lsh",
-    # r4-certified ids rotated OUT of the window in r5 (each holds a green
-    # CORRECTNESS_r04 row; q_minhash_lsh_md5 re-gates with the r6 head above)
-    "q_flagship_revenue",
-    "q_join_semi",
-    "q_map_funcs",
-    "q_tpch_pricing",
-    "q_tpch_shipping_priority",
-    "q_tpch_order_priority",
-    "q_tpch_customer_distribution",
-    "q_tpch_min_cost_supplier",
-    "q_tpch_large_orders",
-    "q_tpch_idle_customers",
-    "q_tpch_local_volume",
-    "q_tpch_revenue_change",
-    "q_tpch_volume_shipping",
-    "q_tpch_market_share",
-    # r5-certified ids rotated OUT of the window in r6 (each holds a green
-    # CORRECTNESS_r05 row; q_tpch_priority_lines stays resident for its
-    # oracle-cast re-gate)
-    "q_tpch_product_profit",
-    "q_tpch_returned_items",
-    "q_tpch_promo_revenue",
-    "q_tpch_top_supplier",
-    "q_tpch_small_qty_revenue",
-    "q_tpch_disjunctive_revenue",
-    "q_tpch_important_stock",
-    "q_tpch_supplier_cnt",
-    "q_tpch_part_promotion",
-    "q_tpch_waiting_supplier",
-    "q_stream_dedup",
-    "q_stream_left_join",
-    "q_stateful_stream",
-    "q_stream_join",
-    # r6-certified ids rotated OUT of the window in r7 (each holds a green
-    # CORRECTNESS_r06 row; the dual-scale sweep keeps their oracles checked)
-    "q_tpch_priority_lines",
-    "q_dedup_exact",
-    "q_minhash_lsh_md5",
-    "q_dedup_clusters",
-    "q_dedup_end2end",
-    "q_cross_dedup",
-    "q_decontaminate",
-    "q_embedding_ann",
-    "q_text_stats",
-    "q_llm_pipeline",
-    "q_curate_end2end",
-    "q_bm25",
-    "q_semdedup",
-    "q_margin_mine_lsh",
-    "q_margin_lsh_recall",
-    # r7-certified ids rotated OUT of the window in r8 (each holds a green
-    # CORRECTNESS_r07 row; the dual-scale sweep keeps their oracles checked)
-    "q_logreg_fit",
-    "q_logreg_filter",
-    "q_logreg_grid",
-    "q_logreg_holdout",
-    "q_logreg_calibration",
-    "q_pack_sequences",
-    "q_stream_pack",
-    "q_margin_mine_ivf",
-    "q_margin_ivf_recall",
-    "q_margin_ivf_curve",
-    "q_orc_roundtrip",
-    "q_shard_manifest",
-    "q_negative_sample",
-    "q_epoch_shuffle",
-    "q_profile_drift",
-    # r8-certified ids rotated OUT of the window in r9 (each holds a green
-    # CORRECTNESS_r08 row; the dual-scale sweep keeps their oracles checked)
-    "q_margin_mine_pq",
-    "q_margin_pq_recall",
-    "q_margin_pq_sharded",
-    "q_margin_pq_xcorpus",
-    "q_margin_xcorpus_recall",
-    "q_stream_margin_pq",
-    "q_bitext_pack",
-    "q_hard_negatives",
-    "q_knn_join_pq",
-    "q_margin_nprobe_sized",
-    "q_ngram_jaccard_prefix",
-    "q_dedup_spans",
-    "q_embedding_topk",
-    "q_embedding_ann_q8",
-    "q_experiment_tracking",
-    # r9-certified ids rotated OUT of the window in r10 (each holds a green
-    # CORRECTNESS_r09 row; the dual-scale sweep keeps their oracles checked)
-    "q_margin_ivfadc_curve",
-    "q_margin_ivfadc_sized",
-    "q_margin_mine_ivfadc",
-    "q_margin_pq_c_curve",
-    "q_margin_c_sized",
-    "q_knn_join_ivfadc",
-    "q_margin_ivfadc_xcorpus",
-    "q_stream_margin_ivfadc",
-    "q_margin_ivfadc_res_curve",
-    "q_margin_ivfadc_res_sized",
-    "q_margin_mine_ivfadc_res",
-    "q_kcenter_select",
-    "q_mmr_select",
-    "q_domain_reweight",
-    "q_reweight_apply",
-    # r10-certified ids rotated OUT of the window in r11 (each holds a green
-    # CORRECTNESS_r10 row; the dual-scale sweep keeps their oracles checked)
-    "q_unimax_alloc",
-    "q_unimax_manifest",
-    "q_stream_unimax",
-    "q_unimax_pack",
-    "q_kcenter_fused",
-    "q_mmr_fused",
-    "q_margin_pq_m_curve",
-    "q_margin_m_sized",
-    "q_margin_ivfadc_res_xcorpus",
-    "q_knn_join_ivfadc_res",
-    "q_stream_margin_ivfadc_res",
-    "q_embedding_pq_cert",
-    "q_embedding_pq_ann",
-    "q_stream_drift",
-    "q_auc_ranked",
-    # r11-certified ids rotated OUT of the window in r12 (each holds a green
-    # CORRECTNESS_r11 row; the dual-scale sweep keeps their oracles checked)
-    "q_spearman",
-    "q_ndcg",
-    "q_lang_f1",
-    "q_stream_shard_manifest",
-    "q_stream_static_join",
-    "q_stream_dedup_watermark",
-    "q_stream_session_window",
-    "q_stream_scd2",
-    "q_stream_curate",
-    "q_stream_cross_dedup",
-    "q_stream_cms",
-    "q_stream_heavy_hitters",
-    "q_curate_v2",
-    "q_temperature_mix",
-    "q_token_budget",
-)
-
-
-def _apply_driver_window() -> None:
-    """Rebuild REGISTRY so iteration order is DRIVER_WINDOW, then
-    ROTATION_QUEUE, then everything else in registration order."""
-    head = DRIVER_WINDOW + ROTATION_QUEUE
-    unknown = [q for q in head if q not in REGISTRY]
-    if unknown:
-        raise RuntimeError(f"DRIVER_WINDOW/ROTATION_QUEUE ids not registered: {unknown}")
-    if len(set(head)) != len(head):
-        raise RuntimeError("duplicate ids across DRIVER_WINDOW/ROTATION_QUEUE")
-    seen = set(head)
-    tail = [name for name in REGISTRY if name not in seen]
-    ordered = {name: REGISTRY[name] for name in [*head, *tail]}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_apply_driver_window()

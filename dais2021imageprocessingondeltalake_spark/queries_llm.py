@@ -3020,23 +3020,11 @@ def _ivf_curve_rows(
     # fit CTE once too) — refitting per setting would run the identical
     # seed/E-step/M-step chain |ladder| times for bit-identical centroids
     _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
-    cos = SIM._cosine_pairs_arrow(6)
-    vecs = emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
     rows = []
     for np_ in _MARGIN_IVF_NPROBES:
         cand = SIM.ivf_candidate_pairs(emb, k=k, nprobe=np_, centroids=cents)
         n_cand = cand.count()
-        scored = (
-            cand.join(
-                vecs.select(F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")),
-                "probe_id",
-            )
-            .join(
-                vecs.select(F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")),
-                "nbr_id",
-            )
-            .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
-        )
+        scored = SIM._exact_rerank_pairs(cand, emb, emb)
         mined = SIM._margin_top2(scored, 11000).select("probe_id", "best_id")
         n_mined = mined.count()
         n_hit = mined.join(brute, ["probe_id", "best_id"]).count()

@@ -1364,6 +1364,40 @@ class TestMarginMinePQ:
         for p, _ in big:
             per[p] = per.get(p, 0) + 1
         assert set(per.values()) == {12}
+        # the same invariance INSIDE cell slices: a cell-pruned input and
+        # a residual input, chunked below the typical cell size
+        import math
+
+        k = math.isqrt(norm.count() - 1) + 1
+        _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
+        ranked = SIM.assign_cells_ranked(emb, cents, n=k).localCheckpoint()
+        home = ranked.select("vec_id", F.element_at("cells", 1).alias("cell"))
+        probes = norm.join(
+            ranked.select("vec_id", F.slice("cells", 1, 3).alias("__cells")),
+            "vec_id",
+        )
+        anchors = SIM.cell_anchors(norm, home, vec_col="nv").localCheckpoint()
+        rv = SIM.residualize(
+            norm.select("vec_id", "nv"), home, anchors, vec_col="nv", out_col="rv"
+        )
+        rbook = SIM.pq_fit(rv, dim=64, m=16, k_codes=16, iters=1, vec_col="rv")
+        rcodes = SIM.pq_encode(rv, rbook, dim=64, m=16, vec_col="rv")
+        for cbook, ccodes, cell_anchors in (
+            (book, codes, None),
+            (rbook, rcodes, anchors),
+        ):
+            def cell_pairs(chunk):
+                return {
+                    (r["probe_id"], r["nbr_id"])
+                    for r in SIM._adc_scan_pairs(
+                        probes, cbook, ccodes, shortlist=12, dim=64, m=16,
+                        vec_col="nv", nbr_chunk=chunk, home_df=home,
+                        cells_col="__cells", anchors_df=cell_anchors,
+                    ).collect()
+                }
+
+            cell_big = cell_pairs(1 << 18)
+            assert cell_pairs(5) == cell_big and cell_big
 
     def test_sharded_scan_equals_unsharded(self, spark):
         """The beyond-residency path: n hash shards of the codes, each

@@ -120,3 +120,49 @@ class TestLadderRefusalDecision:
         verdict, proj = SP._ladder_refusal_decision(curve, 5, self.FLOOR)
         assert verdict == "refused"
         assert proj == 8300
+
+
+_PQ_SPEC = importlib.util.spec_from_file_location(
+    "profile_query",
+    Path(__file__).resolve().parent.parent / "tools" / "profile_query.py",
+)
+PQ = importlib.util.module_from_spec(_PQ_SPEC)
+_PQ_SPEC.loader.exec_module(PQ)
+
+
+class TestProfileEventLog:
+    def test_blank_and_truncated_lines_are_skipped(self):
+        """A blank line and a final line cut off mid-write (a killed or
+        still-running application) must not crash the parser; every
+        complete event around them is still attributed."""
+        events = [
+            {
+                "Event": "SparkListenerJobStart", "Job ID": 0,
+                "Submission Time": 100,
+                "Properties": {"spark.job.description": "q_x#run0"},
+                "Stage Infos": [{"Stage ID": 3}],
+            },
+            {
+                "Event": "SparkListenerTaskEnd", "Stage ID": 3,
+                "Task Metrics": {
+                    "Executor Run Time": 40,
+                    "Shuffle Write Metrics": {"Shuffle Bytes Written": 512},
+                },
+            },
+            {
+                "Event": "SparkListenerStageCompleted",
+                "Stage Info": {
+                    "Stage ID": 3, "Stage Name": "collect at x.py:1",
+                    "Submission Time": 100, "Completion Time": 160,
+                    "Number of Tasks": 1,
+                },
+            },
+        ]
+        lines = [json.dumps(events[0]), "", json.dumps(events[1]), "   "]
+        lines += [json.dumps(events[2]), json.dumps(events[1])[:25]]
+        jobs, stages, stage_to_job = PQ.parse_event_log(lines)
+        assert jobs == {0: {"desc": "q_x#run0", "t0": 100}}
+        assert stage_to_job == {3: 0}
+        assert stages[3]["wall_ms"] == 60
+        assert stages[3]["run_ms"] == 40
+        assert stages[3]["sh_write"] == 512

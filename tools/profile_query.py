@@ -28,6 +28,62 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
+def parse_event_log(lines: list[str]) -> tuple[dict, dict, dict]:
+    """Event-log lines -> (jobs, stages, stage_to_job): jobs by id with
+    description and submit/complete times, stages by id with wall, task
+    count and summed task metrics, and each stage's owning job."""
+    jobs: dict[int, dict] = {}
+    stages: dict[int, dict] = {}
+    stage_to_job: dict[int, int] = {}
+    for line in lines:
+        # a blank line, or a final line cut off by a killed/still-running
+        # application, carries no event: skip it instead of crashing
+        if not line.strip():
+            continue
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        et = ev.get("Event")
+        if et == "SparkListenerJobStart":
+            jid = ev["Job ID"]
+            desc = (ev.get("Properties") or {}).get("spark.job.description", "")
+            jobs[jid] = {"desc": desc, "t0": ev["Submission Time"]}
+            for sinfo in ev.get("Stage Infos", []):
+                stage_to_job[sinfo["Stage ID"]] = jid
+        elif et == "SparkListenerJobEnd":
+            jobs.setdefault(ev["Job ID"], {}).update(t1=ev["Completion Time"])
+        elif et == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            sub, comp = si.get("Submission Time"), si.get("Completion Time")
+            # update, don't replace: TaskEnd aggregation for this stage
+            # has already accumulated into the same dict
+            stages.setdefault(sid, {}).update(
+                name=si.get("Stage Name", ""),
+                wall_ms=(comp - sub) if (sub and comp) else None,
+                tasks=si.get("Number of Tasks"),
+            )
+        elif et == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            m = ev.get("Task Metrics") or {}
+            agg = stages.setdefault(sid, {})
+            agg["run_ms"] = agg.get("run_ms", 0) + m.get("Executor Run Time", 0)
+            agg["cpu_ms"] = agg.get("cpu_ms", 0) + m.get("Executor CPU Time", 0) // 1_000_000
+            srm = m.get("Shuffle Read Metrics") or {}
+            agg["sh_read"] = (
+                agg.get("sh_read", 0)
+                + srm.get("Remote Bytes Read", 0)
+                + srm.get("Local Bytes Read", 0)
+            )
+            agg["fetch_ms"] = agg.get("fetch_ms", 0) + srm.get("Fetch Wait Time", 0)
+            swm = m.get("Shuffle Write Metrics") or {}
+            agg["sh_write"] = agg.get("sh_write", 0) + swm.get("Shuffle Bytes Written", 0)
+            im = m.get("Input Metrics") or {}
+            agg["input"] = agg.get("input", 0) + im.get("Bytes Read", 0)
+    return jobs, stages, stage_to_job
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -81,50 +137,7 @@ def main() -> int:
             lines.extend(f.read_text().splitlines())
     else:
         lines = log_path.read_text().splitlines()
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    stage_to_job: dict[int, int] = {}
-    for line in lines:
-        ev = json.loads(line)
-        et = ev.get("Event")
-        if et == "SparkListenerJobStart":
-            jid = ev["Job ID"]
-            desc = (ev.get("Properties") or {}).get("spark.job.description", "")
-            jobs[jid] = {"desc": desc, "t0": ev["Submission Time"]}
-            for sinfo in ev.get("Stage Infos", []):
-                stage_to_job[sinfo["Stage ID"]] = jid
-        elif et == "SparkListenerJobEnd":
-            jobs.setdefault(ev["Job ID"], {}).update(t1=ev["Completion Time"])
-        elif et == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            sid = si["Stage ID"]
-            sub, comp = si.get("Submission Time"), si.get("Completion Time")
-            # update, don't replace: TaskEnd aggregation for this stage
-            # has already accumulated into the same dict
-            stages.setdefault(sid, {}).update(
-                name=si.get("Stage Name", ""),
-                wall_ms=(comp - sub) if (sub and comp) else None,
-                tasks=si.get("Number of Tasks"),
-            )
-        elif et == "SparkListenerTaskEnd":
-            sid = ev["Stage ID"]
-            m = ev.get("Task Metrics") or {}
-            agg = stages.setdefault(sid, {})
-            agg["run_ms"] = agg.get("run_ms", 0) + m.get("Executor Run Time", 0)
-            agg["cpu_ms"] = agg.get("cpu_ms", 0) + m.get("Executor CPU Time", 0) // 1_000_000
-            srm = m.get("Shuffle Read Metrics") or {}
-            agg["sh_read"] = (
-                agg.get("sh_read", 0)
-                + srm.get("Remote Bytes Read", 0)
-                + srm.get("Local Bytes Read", 0)
-            )
-            agg["fetch_ms"] = agg.get("fetch_ms", 0) + srm.get("Fetch Wait Time", 0)
-            swm = m.get("Shuffle Write Metrics") or {}
-            agg["sh_write"] = agg.get("sh_write", 0) + swm.get("Shuffle Bytes Written", 0)
-            im = m.get("Input Metrics") or {}
-            agg["input"] = agg.get("input", 0) + im.get("Bytes Read", 0)
-            pym = m.get("Python")  # not present; python time is inside run time
-            _ = pym
+    jobs, stages, stage_to_job = parse_event_log(lines)
 
     by_desc: dict[str, list[tuple[int, dict]]] = defaultdict(list)
     for sid, jid in stage_to_job.items():
